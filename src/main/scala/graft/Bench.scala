@@ -11,10 +11,12 @@ object Bench {
     // every exchange to 32 tasks on a ~17 MB sf0.1 corpus, so the sweep
     // measured per-task scheduling floor, not operators (r12: median
     // 8-core/32-core ratio 0.77 — most queries FASTER on fewer cores).
-    // ~2 MB of compressed input per partition reproduces the measured
-    // sweet spot (sf0.1 → 8, the 8-core number that was 32% faster at
-    // identical results), and a big corpus still gets every core:
-    // sf1 (~170 MB) already clamps at cpus. Results are partition-count
+    // ~2 MB of compressed input per partition lands next to the measured
+    // sweet spot (sf0.1 → 9; 8 was the 8-core number that was 32% faster
+    // at identical results), and a big corpus still gets every core:
+    // sf1 (~170 MB) already clamps at cpus. The floor of 4 applies first
+    // and the core clamp last, so a host with fewer than 4 CPUs never
+    // gets more partitions than cores. Results are partition-count
     // independent (Verify runs AQE-on at other widths, oracle green).
     // Override: SPARK_GRAFT_SHUFFLE_PARTS=n (n.b. =cpus reproduces the
     // r12-and-earlier behavior exactly, kept for A/B comparability).
@@ -25,7 +27,7 @@ object Bench {
             Option(f.listFiles()).getOrElse(Array.empty).map(bytes).sum
           else f.length()
         val in = bytes(new java.io.File(sfDir))
-        math.max(4, math.min(cpus.toInt,
+        math.min(cpus.toInt, math.max(4,
           math.ceil(in / (2.0 * (1 << 20))).toInt))
       }
     val builder = SparkSession.builder()

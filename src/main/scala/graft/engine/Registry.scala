@@ -1,16 +1,23 @@
 package graft.engine
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import scala.collection.mutable
+import scala.util.{Failure, Success, Try}
 
 /** Declarative dataset registry — the engine's analog of the reference's
   * `@dp.table(name, comment)` + `dp.read(name)` model
-  * (silver_layer_person.py:4-8, :18-19): datasets are named builders,
-  * dependency edges are declared, and materialization runs in
-  * topological order. On a cluster each independent subtree can
-  * materialize concurrently (the reference's 68 bronze tables are all
-  * independent and run in parallel, bronze_structure.ipynb:93-102).
+  * (silver_layer_person.py:4-8, :18-19): datasets are named builders and
+  * dependency edges are declared. A refresh (`materializeToDir`) runs
+  * independent work concurrently, as Lakeflow runs independent flows (the
+  * reference's 68 bronze tables are all independent and run in parallel,
+  * bronze_structure.ipynb:93-102): every external source loads once, all
+  * concurrently; every dataset is planned on the calling thread in
+  * topological order; then every write goes to a pool sized to the cores,
+  * longest write first. Plans are lazy, so no write reads another
+  * dataset's output and write order cannot change any result.
   */
 final case class TableDef(
     name: String,
@@ -20,6 +27,7 @@ final case class TableDef(
 
 final class Registry {
   private val defs = mutable.LinkedHashMap.empty[String, TableDef]
+  @volatile private var writeTimes = Map.empty[String, Long]
 
   def register(t: TableDef): Unit = {
     require(!defs.contains(t.name), s"duplicate table def: ${t.name}")
@@ -27,6 +35,11 @@ final class Registry {
   }
 
   def tableNames: Seq[String] = defs.keys.toSeq
+
+  /** Write time in ms of each dataset, from the latest `materializeToDir`
+    * that wrote it successfully; the next refresh submits the longest
+    * writes first. */
+  def writeMs: Map[String, Long] = writeTimes
 
   /** Kahn topological order; fails on cycles or missing deps.
     * External inputs (names in `external`) are allowed as leaves. */
@@ -57,40 +70,100 @@ final class Registry {
     order.toSeq
   }
 
-  /** Materializes every dataset in dependency order. `resolve` serves
-    * external (source) tables; registry outputs are memoized so shared
-    * upstreams build once — the `dp.read` batch-edge semantics. */
+  /** Builds every dataset in dependency order. `resolve` serves external
+    * (source) tables and runs once per name; registry outputs are
+    * memoized so shared upstreams build once — the `dp.read` batch-edge
+    * semantics. Nothing is executed: the DataFrames are lazy plans. */
   def materializeAll(
       spark: SparkSession,
       resolve: String => DataFrame): Map[String, DataFrame] = {
-    val built = mutable.Map.empty[String, DataFrame]
-    def lookup(name: String): DataFrame = built.getOrElse(name, resolve(name))
-    topoOrder(external = Set.empty ++ collectExternal).foreach { n =>
-      built(n) = defs(n).build(spark, lookup)
-    }
-    built.toMap
+    val sources = mutable.Map.empty[String, DataFrame]
+    buildAll(spark, n => sources.getOrElseUpdate(n, resolve(n))).toMap
   }
 
-  private def collectExternal: Set[String] =
-    defs.values.flatMap(_.deps).filterNot(defs.contains).toSet
+  /** Every dataset's DataFrame, in topological order. */
+  private def buildAll(
+      spark: SparkSession,
+      source: String => DataFrame): Seq[(String, DataFrame)] = {
+    val built = mutable.LinkedHashMap.empty[String, DataFrame]
+    topoOrder(external = collectExternal.toSet).foreach { n =>
+      built(n) = defs(n).build(spark, m => built.getOrElse(m, source(m)))
+    }
+    built.toSeq
+  }
 
-  /** The `@dp.table` materialization sink: builds every dataset in
-    * dependency order and persists each as parquet under
-    * `outDir/<schema>/<table>` (dots → path segments). Returns
-    * name → path. Batch analog of the streaming parquet+checkpoint
-    * sink; on a cluster independent subtrees write concurrently. */
+  /** External names the datasets read, in registration order. */
+  private def collectExternal: Seq[String] =
+    defs.values.flatMap(_.deps).filterNot(defs.contains).toSeq.distinct
+
+  /** The `@dp.table` materialization sink: persists every dataset as
+    * parquet under `outDir/<schema>/<table>` (dots → path segments) and
+    * returns name → path. Batch analog of the streaming parquet+checkpoint
+    * sink. The external sources load concurrently, `resolve` running once
+    * per name; the plans are built on the calling thread; then the writes
+    * run on `defaultParallelism` threads started for this call, longest
+    * first by `writeMs` (never-timed datasets first, in topological order).
+    * The threads inherit the caller's Spark local properties, so every job
+    * carries the caller's job group. If a load or a write fails, the first
+    * failure in submission order is rethrown as is, once every other one
+    * has finished and every thread has exited. */
   def materializeToDir(
       spark: SparkSession,
       resolve: String => DataFrame,
-      outDir: String): Map[String, String] =
-    materializeAll(spark, resolve).map { case (name, df) =>
+      outDir: String): Map[String, String] = {
+    val width = spark.sparkContext.defaultParallelism
+    val external = collectExternal
+    val loaded = mutable.Map(external.zip(
+      Registry.succeeded(Registry.runAll(width, external.map(n => () => resolve(n))))): _*)
+    val built = buildAll(spark, n => loaded.getOrElseUpdate(n, resolve(n)))
+    val known = writeTimes
+    val writes = built.sortBy { case (n, _) => -known.getOrElse(n, Long.MaxValue) }
+    val outcomes = Registry.runAll(width, writes.map { case (name, df) => () => {
       val path = s"$outDir/${name.replace('.', '/')}"
+      val t0 = System.nanoTime()
       df.write.mode("overwrite").parquet(path)
-      name -> path
-    }
+      (name, path, (System.nanoTime() - t0) / 1000000)
+    }})
+    writeTimes = known ++ outcomes.collect { case Success((n, _, ms)) => n -> ms }
+    Registry.succeeded(outcomes).map { case (n, path, _) => n -> path }.toMap
+  }
 }
 
 object Registry {
+
+  /** Runs `tasks` on at most `width` threads started for this call, in
+    * submission order, and returns every outcome once all threads have
+    * exited. Threads started by the caller inherit its Spark local
+    * properties (job group, scheduler pool). */
+  private def runAll[T](width: Int, tasks: Seq[() => T]): Seq[Try[T]] = {
+    val todo = tasks.toIndexedSeq
+    val out = new Array[Try[T]](todo.size)
+    val next = new AtomicInteger
+    val threads = (0 until math.min(width, todo.size)).map { i =>
+      val t = new Thread(() => {
+        var k = next.getAndIncrement()
+        while (k < todo.size) {
+          out(k) = try Success(todo(k)()) catch { case e: Throwable => Failure(e) }
+          k = next.getAndIncrement()
+        }
+      }, s"graft-refresh-$i")
+      t.setDaemon(true)
+      t
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    out.toSeq
+  }
+
+  /** The values, or the first failure, with any later ones suppressed. */
+  private def succeeded[T](outcomes: Seq[Try[T]]): Seq[T] = {
+    val errors = outcomes.collect { case Failure(e) => e }
+    errors.headOption.foreach { first =>
+      errors.tail.filterNot(_ eq first).foreach(first.addSuppressed)
+      throw first
+    }
+    outcomes.map(_.get)
+  }
 
   /** Bronze fan-out generator — the reference's factory loop creating
     * one passthrough staging table per (schema, table) pair

@@ -195,8 +195,8 @@ object CorrDedup {
     * the candidate kernel, and it inherited the same session-width
     * disease [[candShuffleParts]] cured for the (key, cell) exchange:
     * at the 100× sighting (local[4], shuffle width 4) the kernel emits
-    * 452 M pre-distinct pair rows (post map-side partial aggregate —
-    * HashProbe stage records, r12) and the final distinct aggregate
+    * 452 M pre-distinct pair rows (post map-side partial aggregate,
+    * per-stage shuffle-write records) and the final distinct aggregate
     * ingests 113 M rows PER TASK, external-sorting/spilling for
     * ~236 s/task while GC stays under 1 s — pure per-task working-set
     * excess, growing 3.7× on 1.8× enumeration volume from 60× to 100×.
@@ -246,12 +246,11 @@ object CorrDedup {
     * aggregate — a second bands·bits sign matvec over the corpus — +
     * a broadcast of the over-cap keys, ≤ |entries|/cap rows by
     * construction). That premium measured ~12 % of q35 at the 30×
-    * sighting (67 → 75 s same-box A/B) where EnumVol shows the max
-    * bucket is 1413 < cap — insurance with nothing to insure. So the
-    * gate is the KEYSPACE-ENGAGEMENT point n > 2¹⁸ (conf
-    * `graft.dedup.q35SplitMinRows`): below it the standing per-round
-    * EnumVol artifact line carries the measured max occupancy (the
-    * bound is empirical and visible), at and beyond it random
+    * sighting (67 → 75 s same-box A/B) where a bucket-occupancy probe
+    * measured the max bucket at 1413 < cap — insurance with nothing to
+    * insure. So the gate is the KEYSPACE-ENGAGEMENT point n > 2¹⁸ (conf
+    * `graft.dedup.q35SplitMinRows`): below it the bound on occupancy is
+    * the empirical one measured at the sightings, at and beyond it random
     * occupancy is ≤ n/2^bits ≤ 4 by construction and a hot bucket can
     * only be genuinely-similar mass — exactly the unbounded-skew case
     * the split exists for, and a scale where its cost is amortized.
@@ -266,10 +265,6 @@ object CorrDedup {
   def splitMinRows(spark: SparkSession): Long =
     spark.conf.getOption("graft.dedup.q35SplitMinRows").map(_.toLong)
       .getOrElse(SplitMinRows)
-  /** Shape predicate for diagnostics (EnumVol): would the split
-    * machinery re-key at least one bucket at this corpus size? */
-  def splitEngages(n: Long, maxBucket: Long, cap: Long): Boolean =
-    n > SplitMinRows && maxBucket > cap
   /** Keep a pair unless its projected distance² provably exceeds
     * 2 − 2·threshold; the margin dominates the double matvec rounding
     * (~1e-12), and the quantization grid's own error budget is carried

@@ -686,7 +686,12 @@ object SimilarityOps {
         // eager checkpoint of the M·K-row centroid table: truncates the
         // per-iteration nested-broadcast lineage so each level plans a
         // shallow tree (the CC labels precedent) — values are the
-        // materialized rows themselves, bit-identical by construction
+        // materialized rows themselves, bit-identical by construction.
+        // Assumes local mode: local checkpoint blocks live on executors
+        // and are lost with one. `spark.catalog.clearCache()` does not
+        // release them either (it only drops SQL-cached relations); the
+        // ContextCleaner frees them once the frames are garbage, which at
+        // M·K = 16 rows per iteration costs next to nothing.
         .localCheckpoint(true)
     }
     assign(cents)

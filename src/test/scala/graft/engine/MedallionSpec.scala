@@ -4,18 +4,27 @@ import graft.{Tables, TestSpark}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end medallion run: source parquet → bronze passthroughs →
-  * silver dims/facts → parquet materialization, all through the
-  * declarative registry in one topological pass. */
+  * silver dims/facts and the NOAA bundle → parquet materialization, all
+  * through the declarative registry: plans built in topological order,
+  * the 17 writes run concurrently. */
 class MedallionSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("bronze→silver pipeline materializes all datasets in dependency order") {
     val reg = new Registry
     SilverPipelines.register(reg)
+    NoaaPipelines.register(reg)
     val out = java.nio.file.Files.createTempDirectory("medallion").toString
-    val paths = reg.materializeToDir(spark,
-      name => Tables.load(spark, TestSpark.sfDir, name.stripPrefix("src.")), out)
-    assert(paths.size == SilverPipelines.bronzeInputs.size + 6)
+    def resolve(name: String) = Tables.load(spark, TestSpark.sfDir, name.stripPrefix("src."))
+    val paths = reg.materializeToDir(spark, resolve, out)
+    assert(paths.size == SilverPipelines.bronzeInputs.size + 6 + 4)
+
+    // every concurrently written dataset equals its lazily built DataFrame
+    reg.materializeAll(spark, resolve).foreach { case (name, df) =>
+      val written = spark.read.parquet(paths(name))
+      assert(written.exceptAll(df).count() == 0, name)
+      assert(df.exceptAll(written).count() == 0, name)
+    }
 
     val factWeather = spark.read.parquet(paths("silver.fact_weather"))
     assert(factWeather.count() > 0)
