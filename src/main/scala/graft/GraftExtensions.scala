@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import graft.functions.{DotProduct, HashedShingles, MinHashSig, RollingMinHash, SimHash64, SimHashMd5, TokenBucketCounts}
@@ -8,7 +9,10 @@ import graft.functions.{DotProduct, HashedShingles, MinHashSig, RollingMinHash, 
   * the SparkSessionExtensions injection point
   * (`spark.sql.extensions=graft.GraftExtensions`) and directly onto an
   * existing session — so `spark.sql("SELECT dot_product(a, b) ...")`
-  * works alongside the Column API.
+  * works alongside the Column API. The injection point also installs the
+  * fork-free local filesystem ([[graft.fs.NioLocal]]) into the
+  * SparkContext's Hadoop configuration, before the session creates its
+  * first `file:` filesystem.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -19,9 +23,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           builder.getClass.getCanonicalName, name),
         builder))
     }
-    // ranking-window top-k → bounded top-k aggregate (opt-in via
-    // spark.graft.rewrite.boundedTopK=true)
-    e.injectOptimizerRule(graft.plans.BoundedTopKRewrite.apply)
+    // The session builder has started (or found) the context by now.
+    graft.fs.NioLocal.install(SparkContext.getOrCreate().hadoopConfiguration)
   }
 }
 
@@ -53,9 +56,10 @@ object GraftExtensions {
         .createOrReplaceTempFunction(name, builder, "built-in")
     }
 
-  /** Installs the bounded-top-k rewrite on an already-built session
-    * (the `spark.sql.extensions` path isn't available post-build);
-    * still gated by the spark.graft.rewrite.boundedTopK conf. */
+  /** Installs the bounded-top-k rewrite, once, in the optimizer's last
+    * (user-provided) batch, so it sees plans after Spark's own window
+    * rules; still gated by the spark.graft.rewrite.boundedTopK conf.
+    * This is the rewrite's only installation path. */
   def registerOptimizations(spark: SparkSession): Unit = {
     val rule = graft.plans.BoundedTopKRewrite(spark)
     val existing = spark.experimental.extraOptimizations

@@ -56,17 +56,8 @@ object Tables {
     * scan+aggregate paths, where the exchange would cost more than the
     * single-core map side (the q88 barrier lesson, exchange flavor). */
   def spread(df: DataFrame): DataFrame = {
-    val sess = df.sparkSession
-    // A/B switch (graft.scan.spread=false restores the raw scan):
-    // lets one binary measure both arms under identical session confs.
-    val on = !sess.conf.getOption("graft.scan.spread")
-      .map(_.trim.toLowerCase)
-      .exists(v => v == "false" || v == "0" || v == "no")
-    if (!on) df
-    else {
-      val p = sess.sparkContext.defaultParallelism
-      if (df.rdd.getNumPartitions < p) df.repartition(p) else df
-    }
+    val p = df.sparkSession.sparkContext.defaultParallelism
+    if (df.rdd.getNumPartitions < p) df.repartition(p) else df
   }
 
   /** Registers every table as a temp view so `spark.sql` / `expr` can

@@ -40,7 +40,8 @@ import graft.functions.BoundedTopK
   * window computes anything besides the single row_number.
   *
   * Opt-in via `spark.graft.rewrite.boundedTopK=true` (plan changes
-  * should be chosen, not sprung); injected by [[graft.GraftExtensions]].
+  * should be chosen, not sprung); installed by
+  * [[graft.GraftExtensions.registerOptimizations]].
   */
 case class BoundedTopKRewrite(spark: org.apache.spark.sql.SparkSession)
     extends Rule[LogicalPlan] {

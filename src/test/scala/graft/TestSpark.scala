@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole test run. */
+/** One shared local session for the whole test run, with the engine's
+  * extensions installed as in the benchmark's session. */
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -11,6 +12,7 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
