@@ -11,16 +11,12 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val builder = SparkSession.builder()
+    val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    // extra confs (the TimeQuery hook) so a plan can be dumped under
-    // the exact session confs a timing arm used, e.g. AQE off to see
-    // static ReuseExchange the way the bench session plans it
-    ExtraConf(builder)
-    val spark = builder.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -55,15 +55,4 @@ object GraftExtensions {
       spark.sessionState.functionRegistry
         .createOrReplaceTempFunction(name, builder, "built-in")
     }
-
-  /** Installs the bounded-top-k rewrite, once, in the optimizer's last
-    * (user-provided) batch, so it sees plans after Spark's own window
-    * rules; still gated by the spark.graft.rewrite.boundedTopK conf.
-    * This is the rewrite's only installation path. */
-  def registerOptimizations(spark: SparkSession): Unit = {
-    val rule = graft.plans.BoundedTopKRewrite(spark)
-    val existing = spark.experimental.extraOptimizations
-    if (!existing.exists(_.isInstanceOf[graft.plans.BoundedTopKRewrite]))
-      spark.experimental.extraOptimizations = existing :+ rule
-  }
 }

@@ -15,7 +15,7 @@ import org.apache.spark.sql.SparkSession
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val builder = SparkSession.builder()
+    val spark = SparkSession.builder()
       .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
@@ -23,10 +23,7 @@ object JobProfile {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.adaptive.enabled",
         sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-    // extra confs for A/B experiments: SPARK_GRAFT_CONF="k=v;k2=v2"
-    // (the TimeQuery hook, so profile and timing runs share arms)
-    ExtraConf(builder)
-    val spark = builder.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000L).selectExpr("sum(id)").collect()
 

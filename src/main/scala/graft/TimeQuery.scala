@@ -11,15 +11,13 @@ object TimeQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val builder = SparkSession.builder()
+    val spark = SparkSession.builder()
       .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    // extra confs for A/B experiments: SPARK_GRAFT_CONF="k=v;k2=v2"
-    ExtraConf(builder)
-    val spark = builder.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000L).selectExpr("sum(id)").collect() // JIT warm-up
     args.foreach { name =>

@@ -12,21 +12,20 @@ import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Bounded top-k selection as a partial-aggregating Catalyst aggregate —
-  * the scale-safe replacement for `row_number() OVER (PARTITION BY g
-  * ORDER BY …) <= k` when the group count is TRIVIAL (a handful of
-  * query ids) but the group contents are CORPUS-sized.
+/** Bounded top-k selection as a partial-aggregating Catalyst aggregate,
+  * an alternative to `row_number() OVER (PARTITION BY g ORDER BY …) <= k`
+  * for few groups with corpus-sized contents.
   *
-  * The window form shuffles every scored row to one task per group and
-  * sorts the whole group there: correct, but at 100 TB each partition
-  * is a single-task corpus sort. This aggregate instead keeps a ≤ k-row
-  * buffer per group per map task (a bounded heap — the same shape as
-  * the min-struct top-1 trick generalized to k), so the map side
-  * reduces the corpus to `k · groups · tasks` rows and the shuffle
-  * carries only serialized k-row buffers. Merge is associative and
+  * Both forms shuffle at most k rows per group per map task: Spark
+  * plans the window form as a `Partial` `WindowGroupLimit` below the
+  * exchange and a `Final` one above it. The difference is the map side.
+  * The `Partial` limit first sorts the task's whole input by group and
+  * order key. This aggregate instead keeps a ≤ k-row buffer per group
+  * per map task (a bounded heap, the min-struct top-1 trick generalized
+  * to k) and sorts nothing but those buffers. Merge is associative and
   * commutative; with a TOTAL tie-broken ordering (the callers all end
   * the sort key with a unique id) the result is independent of
-  * partitioning — bit-identical to the window it replaces.
+  * partitioning — bit-identical to the window form.
   *
   * `child` must be a struct; the first `sortDesc.length` fields are the
   * sort key (per-field descending flags, nulls first when ascending /

@@ -31,8 +31,8 @@ object SimilarityOps {
     * data never shuffles for scoring, and the ranking is a BOUNDED
     * top-k aggregate ([[graft.functions.BoundedTopK]]) — each scan
     * task keeps a ≤10-row heap per query and ships only that, where a
-    * `Window.partitionBy(query_id)` would funnel the whole scored
-    * corpus into |queries| single-task sorts at 100 TB. */
+    * `Window.partitionBy(query_id)` ships as few rows but first sorts
+    * the whole scored corpus on the map side. */
   def q21KnnCosine(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), toDouble(col("embedding")).as("v"))

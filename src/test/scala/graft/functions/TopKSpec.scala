@@ -1,5 +1,8 @@
 package graft.functions
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.{Final, Partial, WindowGroupLimitExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * `row_number()` window it replaces — same selection, same rank order,
   * same payload — and invariant to how the input is partitioned (the
   * property that makes the map-side heap + merge legal). */
-class TopKSpec extends AnyFunSuite {
+class TopKSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = graft.TestSpark.spark
   import spark.implicits._
 
@@ -84,5 +87,25 @@ class TopKSpec extends AnyFunSuite {
         rows.sortBy(r => (r._2 % 13, r._2)).take(4)
       }.toSet
     assert(got == exp)
+  }
+
+  // Stock Spark bounds the window form too (InferWindowGroupLimit): a
+  // partial per-group limit below the shuffle, a final one above it.
+  // The final plan is read after the query ran, so it is AQE's.
+  test("stock Spark limits a row_number top-k on both sides of the shuffle") {
+    val w = Window.partitionBy(col("g")).orderBy(col("score").desc, col("id"))
+    val df = data(5000).withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= 3)
+    assert(df.collect().length == 7 * 3)
+    val finals = collect(df.queryExecution.executedPlan) {
+      case l: WindowGroupLimitExec if l.mode == Final => l
+    }
+    val exchanges = finals.flatMap(collect(_) { case e: ShuffleExchangeExec => e })
+    val partials = exchanges.flatMap(collect(_) {
+      case l: WindowGroupLimitExec if l.mode == Partial => l
+    })
+    assert(finals.nonEmpty, "no Final WindowGroupLimit")
+    assert(exchanges.nonEmpty, "no shuffle below the Final WindowGroupLimit")
+    assert(partials.nonEmpty, "no Partial WindowGroupLimit below the shuffle")
   }
 }

@@ -20,7 +20,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * Reading a file sink's directory honors its `_spark_metadata` commit
   * log, so a killed attempt's half-written files are invisible — the
   * exactly-once mechanism itself is what the equality exercises.
-  * RecoverySoak is the at-scale twin (RocksDB, real 10× corpus). */
+  * StateBoundSpec proves the companion property: state stays bounded
+  * as event time advances over many batches. */
 class StreamRecoverySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
