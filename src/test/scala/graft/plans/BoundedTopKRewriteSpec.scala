@@ -1,21 +1,20 @@
 package graft.plans
 
-import graft.{GraftExtensions, TestSpark}
+import graft.TestSpark
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.WindowGroupLimit
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The ranking-window rewrite must (a) fire only when opted in, (b)
-  * eliminate the Window node from the optimized plan, and (c) return
-  * bit-identical rows to the window it replaces, across the filter
-  * shapes it recognizes. */
+/** Spark's bounded top-k rewrite (`InferWindowGroupLimit`) must put a
+  * `WindowGroupLimit` under each ranking-window filter shape graft
+  * writes, and return the same rows as the plain window
+  * (`spark.sql.optimizer.windowGroupLimitThreshold = -1`). TopKSpec
+  * pins where the limit lands in the physical plan. */
 class BoundedTopKRewriteSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = TestSpark.spark
-    GraftExtensions.registerOptimizations(s)
-    s
-  }
+  private lazy val spark = TestSpark.spark
+  private val threshold = "spark.sql.optimizer.windowGroupLimitThreshold"
 
   private def df: DataFrame = {
     import spark.implicits._
@@ -24,92 +23,50 @@ class BoundedTopKRewriteSpec extends AnyFunSuite {
       .toDF("g", "score", "id")
   }
 
-  private def windowTopK(k: Int, keepRank: Boolean): DataFrame = {
-    val w = Window.partitionBy(col("g"))
-      .orderBy(col("score").desc, col("id").asc)
-    val ranked = df.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-    if (keepRank) ranked else ranked.drop("rn")
+  private val w = Window.partitionBy(col("g"))
+    .orderBy(col("score").desc, col("id").asc)
+
+  private def withoutRule[A](f: => A): A = {
+    spark.conf.set(threshold, "-1")
+    try f finally spark.conf.unset(threshold)
   }
 
-  private def withRule[A](f: => A): A = {
-    spark.conf.set("spark.graft.rewrite.boundedTopK", "true")
-    try f finally spark.conf.unset("spark.graft.rewrite.boundedTopK")
-  }
-
-  private def optimizedHasWindow(q: DataFrame): Boolean =
+  private def optimizedHasLimit(q: DataFrame): Boolean =
     q.queryExecution.optimizedPlan.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+      case l: WindowGroupLimit => l
     }.nonEmpty
 
-  test("disabled by default: the window survives") {
-    assert(optimizedHasWindow(windowTopK(5, keepRank = true)))
-  }
-
-  test("enabled: window eliminated, rows bit-identical (rank kept)") {
-    val expected = windowTopK(5, keepRank = true).collect().toSet
-    withRule {
-      val q = windowTopK(5, keepRank = true)
-      assert(!optimizedHasWindow(q), q.queryExecution.optimizedPlan.toString)
-      assert(q.queryExecution.optimizedPlan.toString.contains("bounded_top_k"))
-      assert(q.collect().toSet == expected)
+  /** Builds `q` with the rule on and off: the limit is planned only
+    * with it on, and both return the same rows. */
+  private def assertRewrites(q: () => DataFrame): Unit = {
+    val expected = withoutRule {
+      val plain = q()
+      assert(!optimizedHasLimit(plain))
+      plain.collect().toSet
     }
+    val limited = q()
+    assert(optimizedHasLimit(limited), limited.queryExecution.optimizedPlan.toString)
+    assert(limited.collect().toSet == expected)
   }
 
   test("enabled: rank projected away still rewrites and matches") {
-    val expected = windowTopK(7, keepRank = false).collect().toSet
-    withRule {
-      val q = windowTopK(7, keepRank = false)
-      assert(!optimizedHasWindow(q))
-      assert(q.collect().toSet == expected)
-    }
+    assertRewrites(() => df.withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= 7).drop("rn"))
   }
 
   test("strict < bound and rn = 1 both rewrite") {
-    import spark.implicits._
-    val w = Window.partitionBy(col("g"))
-      .orderBy(col("score").desc, col("id").asc)
-    val lt = df.withColumn("rn", row_number().over(w))
-      .filter(col("rn") < 4)
-    val top1 = df.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-    val expLt = lt.collect().toSet
-    val expTop1 = top1.collect().toSet
-    withRule {
-      val qLt = df.withColumn("rn", row_number().over(w))
-        .filter(col("rn") < 4)
-      val qTop1 = df.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-      assert(!optimizedHasWindow(qLt) && !optimizedHasWindow(qTop1))
-      assert(qLt.collect().toSet == expLt)
-      assert(qTop1.collect().toSet == expTop1)
-    }
-  }
-
-  test("non-row_number windows and rank() are left untouched") {
-    val w = Window.partitionBy(col("g"))
-      .orderBy(col("score").desc, col("id").asc)
-    withRule {
-      val q = df.withColumn("rk", rank().over(w)).filter(col("rk") <= 5)
-      assert(optimizedHasWindow(q), "rank() must not be rewritten")
-      // and an unfiltered row_number window stays a window
-      val q2 = df.withColumn("rn", row_number().over(w))
-      assert(optimizedHasWindow(q2))
-    }
+    assertRewrites(() => df.withColumn("rn", row_number().over(w))
+      .filter(col("rn") < 4))
+    assertRewrites(() => df.withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1))
   }
 
   test("rewrite survives a corpus-sized sanity run on real data") {
     val docs = graft.Tables.load(spark, TestSpark.sfDir, "documents")
       .select(col("doc_id"), col("source"), col("n_chars"))
-    val w = Window.partitionBy(col("source"))
+    val wd = Window.partitionBy(col("source"))
       .orderBy(col("n_chars").desc, col("doc_id").asc)
-    val expected = docs.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3).collect().toSet
-    withRule {
-      val q = docs.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
-      assert(!optimizedHasWindow(q))
-      assert(q.collect().toSet == expected)
-    }
+    assertRewrites(() => docs.withColumn("rn", row_number().over(wd))
+      .filter(col("rn") <= 3))
   }
 }

@@ -1,28 +1,24 @@
 package graft.plans
 
-import graft.{GraftExtensions, SparkEntry, TestSpark}
+import graft.{SparkEntry, TestSpark}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Optimizer-rule safety over the WHOLE query surface: every registered
-  * query must return identical rows with `spark.graft.rewrite.boundedTopK`
-  * on and off. The unit shapes in BoundedTopKRewriteSpec prove the rule
-  * fires and what it produces; this suite proves the rule is HARMLESS
-  * everywhere else — a rewrite that pattern-matched too eagerly on any
-  * of the 228 production plans (whose ranking windows come in many more
-  * shapes than the unit tests) would surface here as a row diff, not in
-  * a driver round.
+/** Safety of Spark's own bounded top-k rewrite over the WHOLE query
+  * surface: every registered query must return identical rows with
+  * `InferWindowGroupLimit` on (the default) and off
+  * (`spark.sql.optimizer.windowGroupLimitThreshold = -1`). graft relies
+  * on that stock rule, not a rule of its own, to bound `row_number()` /
+  * `rank()` filters; a limit inferred where it is not legal on any of
+  * the production plans (whose ranking windows come in many more shapes
+  * than BoundedTopKRewriteSpec's) would surface here as a row diff.
   *
-  * Cost note: each query runs twice at sf0.001; plans the rule does not
-  * touch re-execute identically, so this is pure regression insurance,
-  * sized to the smallest test scale factor on purpose.
+  * Cost note: each query runs twice at sf0.001, sized to the smallest
+  * test scale factor on purpose.
   */
 class RewriteEquivalenceSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = TestSpark.spark
-    GraftExtensions.registerOptimizations(s)
-    s
-  }
+  private lazy val spark = TestSpark.spark
+  private val threshold = "spark.sql.optimizer.windowGroupLimitThreshold"
 
   /** Order-insensitive canonical form; Row.toString is stable within a
     * single JVM for identical values, which is exactly the contract
@@ -40,16 +36,16 @@ class RewriteEquivalenceSpec extends AnyFunSuite {
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
     test(s"$name: rows identical with boundedTopK rewrite on and off") {
       val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-      val off =
+      val on =
         try canon(fn(spark, TestSpark.sfDir))
         finally release(before)
-      spark.conf.set("spark.graft.rewrite.boundedTopK", "true")
+      spark.conf.set(threshold, "-1")
       try {
-        val on = canon(fn(spark, TestSpark.sfDir))
+        val off = canon(fn(spark, TestSpark.sfDir))
         assert(on == off,
-          s"$name returns different rows under the boundedTopK rewrite")
+          s"$name returns different rows with the window group limit off")
       } finally {
-        spark.conf.unset("spark.graft.rewrite.boundedTopK")
+        spark.conf.unset(threshold)
         release(before)
       }
     }
