@@ -9,10 +9,12 @@ import graft.functions.{DotProduct, HashedShingles, MinHashSig, RollingMinHash, 
   * the SparkSessionExtensions injection point
   * (`spark.sql.extensions=graft.GraftExtensions`) and directly onto an
   * existing session — so `spark.sql("SELECT dot_product(a, b) ...")`
-  * works alongside the Column API. The injection point also installs the
-  * fork-free local filesystem ([[graft.fs.NioLocal]]) into the
-  * SparkContext's Hadoop configuration, before the session creates its
-  * first `file:` filesystem.
+  * works alongside the Column API. The injection point also makes two
+  * installs into the SparkContext's Hadoop configuration: the fork-free
+  * local filesystem ([[graft.fs.NioLocal]]), before the session creates
+  * its first `file:` filesystem, and a provenance map that keeps nothing
+  * ([[graft.fs.NoProvenance]]), so every serialized copy of the conf is
+  * cheap to write and read.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -24,7 +26,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         builder))
     }
     // The session builder has started (or found) the context by now.
-    graft.fs.NioLocal.install(SparkContext.getOrCreate().hadoopConfiguration)
+    val conf = SparkContext.getOrCreate().hadoopConfiguration
+    graft.fs.NioLocal.install(conf)
+    graft.fs.NoProvenance.install(conf)
   }
 }
 

@@ -144,9 +144,8 @@ object CorrDedup {
     * bound from the actual m — fewer dims only lower the prune RATE),
     * and the r10 verdict prescribed it as the lever for the
     * superlinear 100× wall. MEASURED at the 60× sighting (min-of-1
-    * singles, same box, AQE off; docs/sighting/
-    * bench_q35_projdims_ab_r11.json): with the candidate exchange at
-    * session width 4 the payload barely matters (96 dims 515.7 s,
+    * singles, same box, AQE off, the round-11 A/B): with the candidate
+    * exchange at session width 4 the payload barely matters (96 dims 515.7 s,
     * 64 → 500.6, 32 → >600 DNF) — and once the exchange is sized from
     * the entry volume (see [[candShuffleParts]], the ACTUAL fix:
     * 515.7 → 178.4 s) narrowing is strictly WORSE (64 dims → 290.1 s):

@@ -49,7 +49,10 @@ object Streams {
   /** Stream-stream LEFT interval join (sales_aw_silver_layer_dim_store
     * .py:24-34): equi key + [lowerBound, upperBound] band on the two
     * event-time columns. Both inputs MUST be watermarked; null-padded
-    * left rows emit once the watermark passes the band. */
+    * left rows emit once the watermark passes the band. Spark's
+    * `StreamingSymmetricHashJoinExec` broadcasts the Hadoop conf on every
+    * copy of the node, several per trigger; [[graft.fs.NoProvenance]]
+    * keeps that broadcast cheap. */
   def intervalJoinLeft(
       left: DataFrame, right: DataFrame,
       equiCond: Column,
