@@ -4,8 +4,9 @@ package graft.engine
   * tables across 5 schemas, declared by the generated fan-out loop
   * (bronze_structure.ipynb:47-102 — dict at :47-79). The names are the
   * WHAT (the operator surface the engine must be able to declare); the
-  * registry supplies the HOW (topologically-ordered passthrough
-  * materialization, all 68 independent → fully parallel on a cluster).
+  * registry supplies the HOW (passthrough materialization: each source
+  * loads once, all concurrently, and the writes run on a pool sized to
+  * the cores, longest write first).
   */
 object ReferenceCatalog {
 

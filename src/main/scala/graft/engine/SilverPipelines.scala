@@ -7,9 +7,10 @@ import graft.ops.{Dims, Relational}
   * TableDef per silver dataset (SURVEY.md §0.1 sites #4–#9), each
   * depending on bronze staging tables, mirroring the bundle structure
   * (silver_layer_person / _production / aw_silver_layer_sales /
-  * silver_layer_common). `dp.read` edges become registry deps; the
-  * medallion run is bronze fan-out → silver builds → parquet
-  * materialization, in topological order.
+  * silver_layer_common). `dp.read` edges become registry deps. A
+  * refresh (`Registry.materializeToDir`) loads each source once, all
+  * concurrently, plans every dataset, then runs the parquet writes on a
+  * pool sized to the cores, longest write first.
   */
 object SilverPipelines {
 

@@ -48,10 +48,10 @@ object Spatial {
     * and point density stays ~constant — the shape of a real geo
     * corpus, which adds territory, not stacked points. Calibrated so
     * every driver SF (n <= 15000 at sf0.1) gets s = 1, i.e. the
-    * original 80 x 170 lattice and byte-identical results; the 10x
-    * sighting (n = 150k) gets s = 2 (extent x4 for 10x points). Both
-    * engines compute s from count(*) with IEEE double sqrt + floor on
-    * identical inputs, so the lattice is engine-agreed at any n. */
+    * original 80 x 170 lattice and byte-identical results; n = 150k
+    * points get s = 2 (extent x4 for 10x points). Both engines compute
+    * s from count(*) with IEEE double sqrt + floor on identical inputs,
+    * so the lattice is engine-agreed at any n. */
   def latticeScale(n: Long): Long =
     math.max(1L, math.floor(math.sqrt(n / 20000.0)).toLong)
 

@@ -297,4 +297,20 @@ class CurationSpec extends AnyFunSuite {
       r.getAs[Int]("l_linenumber"))).distinct.length == rows.length)
     rows.foreach(r => assert(r.getAs[Int]("w") >= 1))
   }
+
+  test("q251 per-user event and conversion counts on a shuffled 8-event fixture") {
+    val fixture = Seq(
+      (1L, "purchase"), (2L, "view"), (1L, "view"), (3L, "purchase"),
+      (2L, "purchase"), (1L, "click"), (3L, "purchase"), (2L, "view"))
+    val dir = java.nio.file.Files.createTempDirectory("targetenc").toString
+    fixture.zipWithIndex.map { case ((u, t), i) =>
+      (i.toLong, u, java.sql.Timestamp.valueOf("2024-03-01 08:00:00"), t, 1.0)
+    }.toDF("event_id", "user_id", "ts", "event_type", "value")
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    val counts = Curation.q251TargetEncoding(spark, dir)
+      .select("user_id", "n_events", "n_conv")
+      .as[(Long, Long, Long)].collect().sorted.toSeq
+    // only purchases convert; one row per user
+    assert(counts == Seq((1L, 3L, 1L), (2L, 3L, 1L), (3L, 2L, 2L)), s"got $counts")
+  }
 }

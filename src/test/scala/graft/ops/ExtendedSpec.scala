@@ -138,6 +138,60 @@ class ExtendedSpec extends AnyFunSuite {
       s"got ${out.toSeq}")
   }
 
+  test("q249 Holt-Winters folds two seasonal cycles and a falling tail to the pinned rows") {
+    // two full cycles with a rising trend so every slot is updated on a
+    // second visit, then a falling tail that drives trend and seasonals
+    // negative: the truncating-division regime
+    def rate(h: Int): Int = {
+      val season = if (h % 24 < 12) 3 else 1
+      math.max(1, season + h / 12 - (if (h > 40) h - 40 else 0))
+    }
+    val events = for {
+      h <- 0 until 50; i <- 0 until rate(h)
+    } yield (9000L + h * 100 + i,
+      java.sql.Timestamp.valueOf(
+        f"2024-01-${1 + h / 24}%02d ${h % 24}%02d:${i % 60}%02d:30"),
+      5L, "hw", 0.0, "{}")
+    val dir = java.nio.file.Files.createTempDirectory("holtwinters").toString
+    events.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    val out = Trend.q249HoltWinters(spark, dir)
+      .as[(String, Long, Long, Long, Long, Long, Long)].collect().sortBy(_._2)
+    val h0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime / 3600000L
+    assert(out.map(r => (r._1, r._2)).toSeq == (0 until 50).map(i => ("hw", h0 + i)))
+    // (x, level_milli, trend_milli, seasonal_milli, forecast_milli) per hour
+    val expected = Seq(
+      (3L, 3000L, 0L, 0L, 3000L), (3L, 3000L, 0L, 0L, 3000L),
+      (3L, 3000L, 0L, 0L, 3000L), (3L, 3000L, 0L, 0L, 3000L),
+      (3L, 3000L, 0L, 0L, 3000L), (3L, 3000L, 0L, 0L, 3000L),
+      (3L, 3000L, 0L, 0L, 3000L), (3L, 3000L, 0L, 0L, 3000L),
+      (3L, 3000L, 0L, 0L, 3000L), (3L, 3000L, 0L, 0L, 3000L),
+      (3L, 3000L, 0L, 0L, 3000L), (3L, 3000L, 0L, 0L, 3000L),
+      (2L, 2750L, -125L, -375L, 2625L), (2L, 2468L, -203L, -234L, 2265L),
+      (2L, 2198L, -236L, -99L, 1962L), (2L, 1971L, -231L, 14L, 1740L),
+      (2L, 1805L, -198L, 97L, 1607L), (2L, 1705L, -149L, 147L, 1556L),
+      (2L, 1667L, -93L, 166L, 1574L), (2L, 1680L, -40L, 160L, 1640L),
+      (2L, 1730L, 5L, 135L, 1735L), (2L, 1801L, 38L, 99L, 1839L),
+      (2L, 1879L, 58L, 60L, 1937L), (2L, 1952L, 65L, 24L, 2017L),
+      (5L, 2762L, 437L, 1119L, 3199L), (5L, 3649L, 662L, 675L, 4311L),
+      (5L, 4483L, 748L, 258L, 5231L), (5L, 5173L, 719L, -86L, 5892L),
+      (5L, 5669L, 607L, -334L, 6276L), (5L, 5957L, 447L, -478L, 6404L),
+      (5L, 6053L, 271L, -526L, 6324L), (5L, 5993L, 105L, -496L, 6098L),
+      (5L, 5823L, -32L, -411L, 5791L), (5L, 5593L, -131L, -296L, 5462L),
+      (5L, 5346L, -189L, -173L, 5157L), (5L, 5117L, -209L, -58L, 4533L),
+      (4L, 4774L, -276L, -574L, 4264L), (4L, 4432L, -309L, -333L, 4024L),
+      (4L, 4117L, -312L, -108L, 3819L), (4L, 3850L, -289L, 82L, 3658L),
+      (4L, 3646L, -246L, 225L, 3547L), (3L, 3263L, -314L, -58L, 3115L),
+      (2L, 2670L, -453L, -252L, 2377L), (1L, 1872L, -625L, -356L, 1382L),
+      (1L, 1151L, -673L, -8L, 577L), (1L, 583L, -620L, 258L, 23L),
+      (1L, 207L, -498L, 426L, -267L), (1L, 25L, -340L, 499L, 804L),
+      (1L, -266L, -315L, 1192L, 94L), (1L, -354L, -201L, 1014L, -297L))
+    assert(out.map(r => (r._3, r._4, r._5, r._6, r._7)).toSeq == expected,
+      s"got ${out.toSeq}")
+    // the seasonal update path genuinely exercised: some negative seasonals
+    assert(out.exists(_._6 < 0L))
+  }
+
   test("q129 trimmed mean drops exactly the bottom/top n div 10 per group") {
     // type a: values 0..9 -> k=1, keep 1..8: sum 3600c, mean 450c
     // type b: 3 values -> k=0, keep all: sum 60000c, mean 20000c

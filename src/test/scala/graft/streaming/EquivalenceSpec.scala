@@ -239,41 +239,6 @@ class EquivalenceSpec extends AnyFunSuite {
     assert(batch.nonEmpty && batch == streaming)
   }
 
-  test("batch retraction deltas equal the streaming keyed sum across micro-batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // (customer, change_type, old_cents, new_cents): customer 1 gains
-    // then loses an order across batches (full retraction); customer 2
-    // is re-stated twice; customer 3 only deletes
-    val b1 = Seq(
-      (1L, "insert", None, Some(500L)),
-      (2L, "insert", None, Some(100L)),
-      (2L, "update", Some(100L), Some(110L)),
-      (3L, "delete", Some(900L), None))
-    val b2 = Seq(
-      (1L, "delete", Some(500L), None),
-      (2L, "update", Some(110L), Some(90L)))
-    def df(rows: Seq[(Long, String, Option[Long], Option[Long])]) =
-      rows.toDF("customer_id", "change_type", "old_cents", "new_cents")
-
-    val batch = RetractStream.deltas(df(b1 ++ b2))
-      .as[(Long, Long, Long)].collect().toSet
-    assert(batch === Set((1L, 0L, 0L), (2L, 1L, 90L), (3L, -1L, -900L)),
-      s"batch deltas wrong: $batch")
-
-    val ev = MemoryStream[(Long, String, Option[Long], Option[Long])]
-    val out = RetractStream.deltas(
-      ev.toDF().toDF("customer_id", "change_type", "old_cents", "new_cents"))
-    val q = out.writeStream.format("memory").queryName("equiv_retract")
-      .outputMode("complete").start()
-    ev.addData(b1: _*); q.processAllAvailable()
-    ev.addData(b2: _*); q.processAllAvailable()
-    q.stop(); q.awaitTermination()
-    val streaming = spark.table("equiv_retract")
-      .as[(Long, Long, Long)].collect().toSet
-    assert(streaming === batch)
-  }
-
   test("batch EWMA equals the streaming ring-buffer smoother on an in-order feed") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -395,51 +360,6 @@ class EquivalenceSpec extends AnyFunSuite {
     assert(u1.last.z == 2L)
   }
 
-  test("batch Holt-Winters equals the streaming 26-long seasonal state mid-stream split") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // two full seasonal cycles with a superimposed trend so every
-    // slot gets a second visit (the seasonal update path), plus a
-    // falling tail that drives trend AND seasonals negative — the
-    // truncation regime where conventions could drift
-    def rate(h: Int): Int = {
-      val season = if (h % 24 < 12) 3 else 1
-      math.max(1, season + h / 12 - (if (h > 40) h - 40 else 0))
-    }
-    def evRows(hours: Range) = for {
-      h <- hours; i <- 0 until rate(h)
-    } yield (9000L + h * 100 + i,
-      java.sql.Timestamp.valueOf(
-        f"2024-01-${1 + h / 24}%02d ${h % 24}%02d:${i % 60}%02d:30"),
-      5L, "hw", 0.0, "{}")
-    val tmp = java.nio.file.Files.createTempDirectory("hwstream").toString
-    evRows(0 until 50)
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet(s"$tmp/events.parquet")
-    val batch = graft.ops.Trend.q249HoltWinters(spark, tmp)
-      .as[(String, Long, Long, Long, Long, Long, Long)].collect().toSet
-
-    def hourly(hours: Range) = evRows(hours)
-      .groupBy(r => r._2.getTime / 3600000)
-      .map { case (h, rs) => HwStream.HourCount("hw", h, rs.size.toLong) }
-      .toSeq.sortBy(_.h)
-    val in = MemoryStream[HwStream.HourCount]
-    val out = HwStream.holtWinters(in.toDS())
-    val q = out.writeStream.format("memory").queryName("equiv_hw")
-      .outputMode("append").start()
-    // three uneven cuts, one mid-cycle — the split must not matter
-    in.addData(hourly(0 until 17): _*); q.processAllAvailable()
-    in.addData(hourly(17 until 18): _*); q.processAllAvailable()
-    in.addData(hourly(18 until 50): _*); q.processAllAvailable()
-    q.stop(); q.awaitTermination()
-    val streaming = spark.table("equiv_hw")
-      .as[(String, Long, Long, Long, Long, Long, Long)].collect().toSet
-    assert(streaming.nonEmpty)
-    assert(streaming === batch, s"batch=$batch\nstream=$streaming")
-    // the seasonal path genuinely exercised: some negative seasonals
-    assert(streaming.exists(_._6 < 0L))
-  }
-
   test("batch RFM metric frame equals the streaming triple's final state under shuffled arrival") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -478,42 +398,6 @@ class EquivalenceSpec extends AnyFunSuite {
     val finalState = emissions.groupBy(_._1)
       .map { case (_, rs) => rs.maxBy(_._3) }.toSet
     // every order emitted a row, and the final state matches batch
-    assert(emissions.length === fixture.length)
-    assert(finalState === batch, s"batch=$batch\nstream=$finalState")
-  }
-
-  test("batch target-encoding per-user counts equal the streaming pair's final state under shuffled arrival") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // three users, events in SHUFFLED (non-chronological) order across
-    // two micro-batches: (count, sum) is a commutative monoid, so the
-    // final state must match q251's batch per-user aggregate under any
-    // arrival order — the prior/enc stay a batch concern, like RFM's
-    // quintile boundaries (global statistics, not per-key state)
-    val fixture = Seq(
-      (1L, "purchase"), (2L, "view"), (1L, "view"), (3L, "purchase"),
-      (2L, "purchase"), (1L, "click"), (3L, "purchase"), (2L, "view"))
-    val tmp = java.nio.file.Files.createTempDirectory("testream").toString
-    fixture.zipWithIndex.map { case ((u, t), i) =>
-      (i.toLong, u, Timestamp.valueOf("2024-03-01 08:00:00"), t, 1.0)
-    }.toDF("event_id", "user_id", "ts", "event_type", "value")
-      .write.mode("overwrite").parquet(s"$tmp/events.parquet")
-    val batch = graft.ops.Curation.q251TargetEncoding(spark, tmp)
-      .select(col("user_id"), col("n_events"), col("n_conv"))
-      .as[(Long, Long, Long)].collect().toSet
-
-    val rows = fixture.map { case (u, t) => TargetEncodeStream.EventRow(u, t) }
-    val in = MemoryStream[TargetEncodeStream.EventRow]
-    val q = TargetEncodeStream.targetCounts(in.toDS()).writeStream
-      .format("memory").queryName("equiv_te").outputMode("append").start()
-    in.addData(rows.take(3): _*); q.processAllAvailable()
-    in.addData(rows.drop(3): _*); q.processAllAvailable()
-    q.stop(); q.awaitTermination()
-    val emissions = spark.table("equiv_te")
-      .as[(Long, Long, Long)].collect()
-    // latest emission per key = the row with that key's max n_events
-    val finalState = emissions.groupBy(_._1)
-      .map { case (_, rs) => rs.maxBy(_._2) }.toSet
     assert(emissions.length === fixture.length)
     assert(finalState === batch, s"batch=$batch\nstream=$finalState")
   }
